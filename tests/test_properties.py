@@ -1753,3 +1753,35 @@ def test_pq_adc_matches_numpy_reference(spark):
         ], qid
         for (_, _, a), (_, _, b) in zip(have, want):
             assert abs(a - b) < 1e-9, qid
+
+
+@given(
+    lists=st.lists(
+        st.lists(st.integers(0, 6), max_size=6).map(sorted), min_size=1, max_size=5
+    )
+)
+@_settings
+def test_posting_pairs_matches_index_combinations(spark, lists):
+    """functions.pairgen.posting_pairs yields exactly the i<j index pairs
+    of each (sorted) list, duplicates kept, with pass-through columns
+    intact — also when a pass-through column is named like its scratch
+    position column."""
+    import itertools
+
+    from u_s__non_farm_payrolls_an_olap_analysis_spark.functions.pairgen import (
+        posting_pairs,
+    )
+
+    posting = spark.createDataFrame(
+        list(enumerate(lists)), "__i long, ps array<long>"
+    )
+    got = sorted(
+        tuple(r)
+        for r in posting_pairs(posting, "ps", "a", "b", ("__i",)).collect()
+    )
+    want = sorted(
+        (k, a, b)
+        for k, ps in enumerate(lists)
+        for a, b in itertools.combinations(ps, 2)
+    )
+    assert got == want

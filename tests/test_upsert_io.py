@@ -5,6 +5,8 @@ replacement for the reference's row-at-a-time ON CONFLICT loop
 from __future__ import annotations
 
 from u_s__non_farm_payrolls_an_olap_analysis_spark.io import (
+    cache_tables,
+    read_table,
     upsert_by_key,
     write_upsert_parquet,
 )
@@ -97,3 +99,31 @@ def test_write_overwrite_leaves_no_stragglers(spark, tmp_path):
     assert sorted(r["k"] for r in spark.read.parquet(path).collect()) == [2, 3]
     residue = [d for d in os.listdir(tmp_path) if "__staging" in d or "__old" in d]
     assert residue == []
+
+
+def test_write_invalidates_memoized_reads(spark, tmp_path):
+    """A write through write_upsert_parquet is visible to the next
+    read_table with no explicit clear_table_cache(): neither the memoized
+    relation over the replaced files nor the cache_tables copy of the old
+    table may be returned."""
+    d = str(tmp_path)
+    path = f"{d}/orders.parquet"
+    schema = "k long, v double"
+    write_upsert_parquet(path, spark.createDataFrame([(1, 10.0), (2, 20.0)], schema))
+
+    def rows():
+        return {r["k"]: r["v"] for r in read_table(spark, d, "orders").collect()}
+
+    assert rows() == {1: 10.0, 2: 20.0}
+    current = read_table(spark, d, "orders")
+    updates = spark.createDataFrame([(2, 99.0), (3, 30.0)], schema)
+    write_upsert_parquet(path, upsert_by_key(current, updates, ["k"]))
+    assert rows() == {1: 10.0, 2: 99.0, 3: 30.0}
+
+    cached = cache_tables(spark, d, ("orders",))["orders"]
+    try:
+        updates = spark.createDataFrame([(1, 11.0)], schema)
+        write_upsert_parquet(path, upsert_by_key(cached, updates, ["k"]))
+        assert rows() == {1: 11.0, 2: 99.0, 3: 30.0}
+    finally:
+        cached.unpersist()

@@ -39,14 +39,21 @@ def posting_pairs(
     output row per index pair, duplicates preserved, no equality
     filter (add ``.filter(a != b)`` at the call site where the old
     code had one). Works for element types including structs.
+
+    The position ``i`` rides in a scratch column that is dropped again;
+    its name is derived so it never shadows a column of ``posting`` or
+    an output name.
     """
+    pos = "__i"
+    while pos in {*posting.columns, out_a, out_b}:
+        pos = f"_{pos}"
     ex = posting.select(
-        *pass_cols, list_col, F.posexplode(list_col).alias("__i", out_a)
+        *pass_cols, list_col, F.posexplode(list_col).alias(pos, out_a)
     )
     return ex.select(
         *pass_cols,
         out_a,
         F.explode(
-            F.slice(list_col, F.col("__i") + F.lit(2), F.size(list_col))
+            F.slice(list_col, F.col(pos) + F.lit(2), F.size(list_col))
         ).alias(out_b),
     )

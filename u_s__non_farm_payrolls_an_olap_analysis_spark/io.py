@@ -37,13 +37,15 @@ TABLES = (
 )
 
 
-# Source-relation memo: repeated queries over the same immutable table reuse
-# one analyzed relation instead of re-listing files and re-reading footers on
+# Source-relation memo: repeated queries over the same table reuse one
+# analyzed relation instead of re-listing files and re-reading footers on
 # every call (100-300 ms per spark.read.parquet — the dominant cost of small
-# warm queries). The test fixtures are read-only; a mutable deployment would
-# call clear_table_cache() after writes. Keyed by applicationId (stable and
-# unique per session) — id(spark) could be reused by a new session after GC
-# and hand back a DataFrame bound to a stopped context.
+# warm queries). write_upsert_parquet clears it after every write; a writer
+# outside this module must call clear_table_cache(). Keyed by applicationId
+# (stable and unique per SparkContext) — id(spark) could be reused by a new
+# session after GC and hand back a DataFrame bound to a stopped context. A
+# hit is used only by the session that built it: spark.newSession() shares
+# the applicationId but not the conf.
 _TABLE_MEMO: dict[tuple[str, str, str], DataFrame] = {}
 
 
@@ -72,7 +74,7 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     key = (spark.sparkContext.applicationId, sf_dir, name)
     memo = _TABLE_MEMO.get(key)
-    if memo is not None:
+    if memo is not None and memo.sparkSession is spark:
         return memo
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -222,6 +224,10 @@ def write_upsert_parquet(
 
     ``partition_by`` (e.g. year of the date key) enables partition pruning
     for downstream scans at scale.
+
+    After the write the table memo and the plan memo are cleared
+    (:func:`clear_table_cache`), so no later ``read_table`` or memoized
+    operator returns a relation over the replaced files.
     """
     import shutil
     import uuid as _uuid
@@ -245,6 +251,7 @@ def write_upsert_parquet(
             # would use a table format's atomic commit for
             # read-modify-write cycles).
             _write(target_path)
+            clear_table_cache()
             return
         # Covers file:/x, file://x, file:///x — urlparse yields the bare
         # local path for all three single-host forms.
@@ -275,3 +282,4 @@ def write_upsert_parquet(
         raise
     if old_path is not None:
         shutil.rmtree(old_path, ignore_errors=True)
+    clear_table_cache()

@@ -22,6 +22,13 @@ Determinism discipline shared with the DuckDB oracles: every exposed DOUBLE
 is ``round()``-ed (4 dp for money sums, 6 dp for percents) so parallel
 floating-point accumulation order cannot flip the value hash; every LIMIT is
 preceded by a total ORDER BY with a unique tiebreaker.
+
+Plan reuse: every registry key here is a pure function of (spark, sf_dir)
+and carries ``@plan_memo`` (``functions/plan_cache.py``), so a repeated
+question — the dashboard refresh, like the reference's ``@st.cache_data``
+frame — re-executes its built plan and skips the stages it already
+materialized. The building blocks ``orders``, ``monthly_series`` and
+``monthly_with_pct`` are not memoized.
 """
 
 from __future__ import annotations
@@ -105,6 +112,7 @@ W_SQL = (
 # ---------------------------------------------------------------------------
 
 
+@plan_memo
 def scan_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S2 — full-table scan. Unlike the reference's ``SELECT *`` into client
     memory (``dashboard_nfp.py:67-68``), this is a lazy columnar scan:
@@ -119,6 +127,7 @@ def scan_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@plan_memo
 def cache_result(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S4 — memoized intermediate (``@st.cache_data``,
     ``dashboard_nfp.py:50``) → ``df.cache()`` on the monthly series, reused
@@ -135,6 +144,7 @@ def cache_result(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+@plan_memo
 def project_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P1 — column rename (``etl.py:34``)."""
     return orders(spark, sf_dir).select(
@@ -144,6 +154,7 @@ def project_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@plan_memo
 def project_cast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P2 — explicit casts (``etl.py:35``; ``dashboard_nfp.py:69,116``).
     ``floor`` before the int cast: Spark truncates double→int while DuckDB
@@ -193,6 +204,7 @@ def filter_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@plan_memo
 def filter_month_in(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P5 — Q4 slice: month IN (10,11,12) (``dashboard_nfp.py:195``)."""
     m = monthly_series(spark, sf_dir)
@@ -201,12 +213,14 @@ def filter_month_in(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@plan_memo
 def filter_eq_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P6 — equality drill filter (``dashboard_nfp.py:347``)."""
     m = monthly_series(spark, sf_dir)
     return m.filter(year_of("month_start") == 1998).select("month_start", "total")
 
 
+@plan_memo
 def filter_dropna(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P7 — drop the lag-null first row (``etl.py:38``)."""
     w = monthly_with_pct(spark, sf_dir)
@@ -215,6 +229,7 @@ def filter_dropna(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@plan_memo
 def filter_theta_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P8 — range predicates against a computed scalar
     (``dashboard_nfp.py:161,164``): months after an anchor whose level
@@ -248,6 +263,7 @@ def slice_avg_by_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@plan_memo
 def rollup_quarter_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A2 — quarterly roll-up (``dashboard_nfp.py:246-247``)."""
     return (
@@ -260,6 +276,7 @@ def rollup_quarter_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@plan_memo
 def rollup_year_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3 — yearly roll-up (``dashboard_nfp.py:250``)."""
     return (
@@ -281,6 +298,7 @@ def rollup_decade_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@plan_memo
 def dice_q4_avg_by_month(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A5 — Q4 growth by month name. SQL-expander semantics chosen per
     SURVEY §2.5: lag over the FULL series first (so October vs September is
@@ -293,6 +311,7 @@ def dice_q4_avg_by_month(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@plan_memo
 def scalar_max(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A6 — global max of the series (prior-peak scalar,
     ``dashboard_nfp.py:161``)."""
@@ -301,6 +320,7 @@ def scalar_max(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@plan_memo
 def scalar_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A6 — global min (recovery-date min shape, ``dashboard_nfp.py:167``)."""
     return monthly_series(spark, sf_dir).agg(
@@ -308,6 +328,7 @@ def scalar_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@plan_memo
 def argmax_argmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A7 — the rows achieving the extremes (pandas ``idxmax``/``idxmin``,
     ``dashboard_nfp.py:340,399``) as order-by-limit-1 with a deterministic
@@ -331,6 +352,7 @@ def argmax_argmin(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+@plan_memo
 def window_pct_change_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W1 — lag-1 pct change over the whole series (``etl.py:37``),
     null first row retained (callers drop per P7)."""
@@ -338,6 +360,7 @@ def window_pct_change_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     return w.select("month_start", "total", dround("pct", 6).alias("mom_pct_change"))
 
 
+@plan_memo
 def window_pct_change_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W2 — lag-1 pct change within each year partition
     (``dashboard_nfp.py:196``)."""
@@ -350,6 +373,7 @@ def window_pct_change_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
+@plan_memo
 def window_diff_on_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W3 — window on top of an aggregate (the reference's CTE-then-window
     SQL shape, ``dashboard_nfp.py:260-289``): yearly totals, annual gain
@@ -377,6 +401,7 @@ def rollup_quarter_qoq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@plan_memo
 def window_running_max(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W4 — running prior-peak with an explicit rows-frame
     (``dashboard_nfp.py:161``)."""
@@ -391,11 +416,13 @@ def window_running_max(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+@plan_memo
 def sort_by_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O1 — ORDER BY date (``dashboard_nfp.py:96,129``)."""
     return monthly_series(spark, sf_dir).orderBy("month_start")
 
 
+@plan_memo
 def limit_head(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O2 — head(5) preview (``dashboard_nfp.py:295``); deterministic via a
     total order before the limit."""
@@ -415,6 +442,7 @@ def top1_by_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@plan_memo
 def drill_sharpest_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drill-down Q2 — the month with the sharpest MoM drop
     (``dashboard_nfp.py:398-401``)."""
@@ -436,6 +464,7 @@ def drill_sharpest_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+@plan_memo
 def dice_recovery_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J1 — the recovery analysis, the reference's one nontrivial query and
     its worst anti-pattern: a per-drop ``iterrows`` loop
@@ -482,6 +511,7 @@ def dice_recovery_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@plan_memo
 def lookup_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J2 — point lookup of the month achieving the global peak
     (``dashboard_nfp.py:170``) — order-by-limit-1, no collect."""
@@ -700,6 +730,7 @@ SCD2_FAR_FUTURE = "2099-12-31 00:00:00"  # ns-safe sentinel (Arrow ts[ns] caps a
 SCD2_FAR_PAST = "1900-01-01 00:00:00"  # version-1 lower bound (Kimball first-row convention)
 
 
+@plan_memo
 def scd2_customer_priority_history(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -801,6 +832,7 @@ ORACLE["scd2_customer_priority_history"] = (
 )
 
 
+@plan_memo
 def scd2_point_in_time_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """**Point-in-time (temporal) join against the SCD2 history** — the
     consumer side of `scd2_customer_priority_history`, and the
