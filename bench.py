@@ -472,7 +472,8 @@ def _sfn_section(
     # (partitions=4, AQE off — see main()); at 30x facts those settings
     # strangle the multi-way shuffle joins (measured: q8 15 s at 4
     # partitions vs ~1.5 s tuned). Scoped at-scale posture, re-swept in
-    # round 12 (scripts/measure_q8_sfn_sweep.py / _posture_final.py):
+    # round 12 (`git show 8188806:scripts/measure_q8_sfn_sweep.py` and
+    # `git show 8188806:scripts/measure_q8_posture_final.py`):
     # at 30x, 16 partitions + AQE OFF wins on EVERY section query — all
     # joins already broadcast explicitly via the size gate, so AQE's
     # query-stage materialization is pure fixed overhead here (~0.1-0.2 s

@@ -51,7 +51,8 @@ rep, runs, base_dir = {rep}, {runs}, {base_dir!r}
 out_dir = os.path.join({repo!r}, ".bench_sf100x" if rep == 100
                        else f".bench_iso{{rep}}x")
 # posture matches bench._sfn_section's swept settings: 16 partitions
-# below 100x, 32 at 100x (measure_q8_sfn_sweep.py / BENCH sfn100)
+# below 100x, 32 at 100x (BENCH sfn100;
+# `git show 8188806:scripts/measure_q8_sfn_sweep.py`)
 spark = get_spark(app_name="iso100x",
                   shuffle_partitions=(32 if rep >= 100 else 16),
                   extra_conf={{"spark.sql.adaptive.enabled": "true"}})

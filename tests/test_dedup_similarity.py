@@ -304,7 +304,7 @@ def test_semdedup_pairs_are_within_cluster_only(spark):
     from u_s__non_farm_payrolls_an_olap_analysis_spark.operators.similarity import (
         IVF_K,
         KMEANS_ITERS,
-        _train_kmeans_codebook_exact,
+        _train_kmeans_codebook,
         assign_to_codebook,
     )
 
@@ -315,7 +315,7 @@ def test_semdedup_pairs_are_within_cluster_only(spark):
         (F.col("neighbor_id") + dedup.PLANT_OFFSET).alias("neighbor_id"), "ce"
     )
     corpus = emb.unionByName(planted)
-    cent = _train_kmeans_codebook_exact(corpus, IVF_K, KMEANS_ITERS)
+    cent = _train_kmeans_codebook(corpus, IVF_K, KMEANS_ITERS, exact=True)
     cluster = {
         r["neighbor_id"]: r["list_id"]
         for r in assign_to_codebook(corpus, cent).collect()

@@ -6,10 +6,13 @@ from __future__ import annotations
 
 from u_s__non_farm_payrolls_an_olap_analysis_spark.io import (
     cache_tables,
+    clear_table_cache,
     read_table,
     upsert_by_key,
     write_upsert_parquet,
 )
+
+from tests.conftest import SF_SMOKE
 
 
 def test_upsert_update_and_insert(spark):
@@ -127,3 +130,22 @@ def test_write_invalidates_memoized_reads(spark, tmp_path):
         assert rows() == {1: 11.0, 2: 99.0, 3: 30.0}
     finally:
         cached.unpersist()
+
+
+def test_cache_tables_holds_one_copy_and_clear_releases_it(spark):
+    """A second cache_tables() on the same dir replaces its cached frame
+    instead of caching a copy of it, and clear_table_cache() unpersists
+    what cache_tables() cached."""
+    clear_table_cache()
+    spark.catalog.clearCache()
+    # earlier tests' localCheckpoint-ed RDDs stay persisted: count new ones
+    before = set(spark.sparkContext._jsc.getPersistentRDDs())
+
+    def persisted():
+        return len(set(spark.sparkContext._jsc.getPersistentRDDs()) - before)
+
+    cache_tables(spark, SF_SMOKE, ("orders",))
+    cache_tables(spark, SF_SMOKE, ("orders",))
+    assert persisted() == 1
+    clear_table_cache()
+    assert persisted() == 0

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -47,9 +48,20 @@ TABLES = (
 # hit is used only by the session that built it: spark.newSession() shares
 # the applicationId but not the conf.
 _TABLE_MEMO: dict[tuple[str, str, str], DataFrame] = {}
+# The frames cache_tables() cached, by the same key: only these are ever
+# unpersisted here (a caller's own cache() is the caller's to undo).
+_CACHED: dict[tuple[str, str, str], DataFrame] = {}
 
 
 def clear_table_cache() -> None:
+    """Drop the table and plan memos and unpersist every frame
+    :func:`cache_tables` cached in the live SparkContext (frames of a
+    stopped context died with it and are only forgotten)."""
+    sc = SparkContext._active_spark_context
+    for (app_id, _, _), df in _CACHED.items():
+        if sc is not None and app_id == sc.applicationId:
+            df.unpersist()
+    _CACHED.clear()
     _TABLE_MEMO.clear()
     # memoized operator plans reference the old relations — drop them too
     from .functions.plan_cache import clear_plan_memo
@@ -76,6 +88,12 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     memo = _TABLE_MEMO.get(key)
     if memo is not None and memo.sparkSession is spark:
         return memo
+    df = _scan(spark, sf_dir, name)
+    _TABLE_MEMO[key] = df
+    return df
+
+
+def _scan(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
@@ -85,7 +103,6 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn("ts", ntz_from_epoch_micros(F.expr("ts div 1000")))
     else:
         df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    _TABLE_MEMO[key] = df
     return df
 
 
@@ -131,8 +148,10 @@ def cache_tables(
     assumed).
 
     The memo table is updated so every subsequent ``read_table`` (hence
-    every registry operator) transparently reuses the cached frames.
-    Call :func:`clear_table_cache` + ``spark.catalog.clearCache()`` to undo.
+    every registry operator) transparently reuses the cached frames. Each
+    table is cached from a fresh scan, and a frame an earlier call cached
+    for it is unpersisted first, so repeated calls hold one cached copy.
+    :func:`clear_table_cache` unpersists them all.
     """
     # operator plans memoized against the pre-cache relations must rebuild
     from .functions.plan_cache import clear_plan_memo
@@ -140,11 +159,15 @@ def cache_tables(
     clear_plan_memo()
     out: dict[str, DataFrame] = {}
     for t in tables:
+        key = (spark.sparkContext.applicationId, sf_dir, t)
+        old = _CACHED.pop(key, None)
+        if old is not None:
+            old.unpersist()
         size = _path_bytes(f"{sf_dir}/{t}.parquet")
         n = int(max(1, min(max_partitions, size // target_partition_bytes)))
-        df = read_table(spark, sf_dir, t).repartition(n).cache()
+        df = _scan(spark, sf_dir, t).repartition(n).cache()
         df.count()  # materialize now — keeps cache fill out of query timings
-        _TABLE_MEMO[(spark.sparkContext.applicationId, sf_dir, t)] = df
+        _TABLE_MEMO[key] = _CACHED[key] = df
         out[t] = df
     return out
 

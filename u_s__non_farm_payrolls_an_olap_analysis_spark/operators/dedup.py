@@ -1008,7 +1008,7 @@ def dedup_semantic_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
        planted harnesses: identical vectors MUST share a cluster and
        score cosine 1.0, so recall on them is 1 by construction);
     2. codebook = the deterministic scaled-int64 Lloyd's k-means
-       (``similarity._train_kmeans_codebook_exact``, bit-identical
+       (``similarity._train_kmeans_codebook(..., exact=True)``, bit-identical
        across engines and partitionings);
     3. cluster assignment = shared rounded-argmax
        (``similarity.assign_to_codebook``);
@@ -1028,7 +1028,7 @@ def dedup_semantic_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .similarity import (
         IVF_K,
         KMEANS_ITERS,
-        _train_kmeans_codebook_exact,
+        _train_kmeans_codebook,
         assign_to_codebook,
     )
 
@@ -1039,7 +1039,7 @@ def dedup_semantic_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("neighbor_id") + PLANT_OFFSET).alias("neighbor_id"), "ce"
     )
     corpus = emb.unionByName(planted)
-    cent = _train_kmeans_codebook_exact(corpus, IVF_K, KMEANS_ITERS)
+    cent = _train_kmeans_codebook(corpus, IVF_K, KMEANS_ITERS, exact=True)
     # round 15: the within-cluster a ⋈ b self-join consumes `assigned`
     # (training + argmax assignment) TWICE — eager checkpoint cuts the
     # whole pipeline above it to one execution (rule 5 corollary a)

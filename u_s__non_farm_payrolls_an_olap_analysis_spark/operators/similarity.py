@@ -144,7 +144,15 @@ def _ivf_search(q: DataFrame, cand: DataFrame, cent: DataFrame) -> DataFrame:
 KMEANS_ITERS = 3
 
 
-def _train_kmeans_codebook(cand: DataFrame, k: int, iters: int) -> DataFrame:
+# micro-unit scale for the deterministic Lloyd's update: member components
+# are summed as scaled int64 (exact, order-independent), so the centroid
+# means are bit-identical across engines and partitionings
+KMEANS_SCALE = 1_000_000.0
+
+
+def _train_kmeans_codebook(
+    cand: DataFrame, k: int, iters: int, exact: bool = False
+) -> DataFrame:
     """Distributed Lloyd's iterations, entirely as DataFrame ops (no
     ``collect`` — the codebook never visits the driver until broadcast).
 
@@ -153,12 +161,23 @@ def _train_kmeans_codebook(cand: DataFrame, k: int, iters: int) -> DataFrame:
     - update: ``posexplode`` each member vector, per-(centroid, dim) mean,
       re-assemble ordered with ``sort_array(collect_list(struct(pos, m)))``.
 
+    ``exact`` selects the mean. False: an FP ``avg``, whose last bits
+    depend on summation order, which is why its operator is rows-only.
+    True: a DETERMINISTIC update — components accumulate as scaled int64
+    (``dround`` to micro-units — exact, commutative,
+    partition-order-independent) and divide back once, over a codebook
+    initialised as doubles, so the trained codebook is bit-identical
+    across engines.
+
     Empty clusters drop out (k shrinks) — standard Lloyd's behavior. At
-    100 TB each iteration would be ``persist()``-ed to cut lineage and the
-    codebook trained on a sample; the operator structure is unchanged.
+    100 TB the codebook would be trained on a sample; the operator
+    structure is unchanged.
     """
+    init = F.col("ce")
+    if exact:
+        init = F.transform(init, lambda x: x.cast("double"))
     cent = cand.orderBy("neighbor_id").limit(k).select(
-        F.col("neighbor_id").alias("cent_id"), F.col("ce").alias("cent_e")
+        F.col("neighbor_id").alias("cent_id"), init.alias("cent_e")
     )
     for _ in range(iters):
         scored = cand.join(F.broadcast(cent)).select(
@@ -173,13 +192,26 @@ def _train_kmeans_codebook(cand: DataFrame, k: int, iters: int) -> DataFrame:
             .filter(F.col("rn") == 1)
             .select("neighbor_id", "ce", "cent_id")
         )
-        cent = (
-            members.select(
-                "cent_id", F.posexplode("ce").alias("pos", "val")
+        dims = members.select(
+            "cent_id", F.posexplode("ce").alias("pos", "val")
+        ).groupBy("cent_id", "pos")
+        if exact:
+            means = dims.agg(
+                F.sum(
+                    dround(F.col("val").cast("double") * KMEANS_SCALE, 0)
+                    .cast("long")
+                ).alias("s"),
+                F.count(F.lit(1)).alias("n"),
+            ).select(
+                "cent_id",
+                "pos",
+                (F.col("s").cast("double") / F.col("n") / KMEANS_SCALE)
+                .alias("m"),
             )
-            .groupBy("cent_id", "pos")
-            .agg(F.avg(F.col("val").cast("double")).alias("m"))
-            .groupBy("cent_id")
+        else:
+            means = dims.agg(F.avg(F.col("val").cast("double")).alias("m"))
+        cent = (
+            means.groupBy("cent_id")
             .agg(
                 F.transform(
                     F.sort_array(F.collect_list(F.struct("pos", "m"))),
@@ -214,75 +246,6 @@ def sim_search_ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ivf_search(q, cand, cent)
 
 
-# micro-unit scale for the deterministic Lloyd's update: member components
-# are summed as scaled int64 (exact, order-independent), so the centroid
-# means are bit-identical across engines and partitionings
-KMEANS_SCALE = 1_000_000.0
-
-
-def _train_kmeans_codebook_exact(
-    cand: DataFrame, k: int, iters: int
-) -> DataFrame:
-    """Lloyd's iterations with a DETERMINISTIC update: per-(centroid, dim)
-    means accumulate as scaled int64 (``dround`` to micro-units — exact,
-    commutative, partition-order-independent) and divide back once, so
-    the trained codebook is bit-identical across engines — the FP-mean
-    variant (:func:`_train_kmeans_codebook`) differs in the last bits per
-    summation order, which is why its operator is rows-only. Structure
-    (init / assign / update) is otherwise identical."""
-    from ..functions.numerics import dround
-
-    cent = cand.orderBy("neighbor_id").limit(k).select(
-        F.col("neighbor_id").alias("cent_id"),
-        F.transform(F.col("ce"), lambda x: x.cast("double")).alias("cent_e"),
-    )
-    for _ in range(iters):
-        scored = cand.join(F.broadcast(cent)).select(
-            "neighbor_id",
-            "ce",
-            "cent_id",
-            dround(cosine(F.col("ce"), F.col("cent_e")), 6).alias("cc"),
-        )
-        w = Window.partitionBy("neighbor_id").orderBy(F.col("cc").desc(), "cent_id")
-        members = (
-            scored.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("neighbor_id", "ce", "cent_id")
-        )
-        cent = (
-            members.select(
-                "cent_id", F.posexplode("ce").alias("pos", "val")
-            )
-            .groupBy("cent_id", "pos")
-            .agg(
-                F.sum(
-                    dround(F.col("val").cast("double") * KMEANS_SCALE, 0)
-                    .cast("long")
-                ).alias("s"),
-                F.count(F.lit(1)).alias("n"),
-            )
-            .select(
-                "cent_id",
-                "pos",
-                (F.col("s").cast("double") / F.col("n") / KMEANS_SCALE)
-                .alias("m"),
-            )
-            .groupBy("cent_id")
-            .agg(
-                F.transform(
-                    F.sort_array(F.collect_list(F.struct("pos", "m"))),
-                    lambda s: s["m"],
-                ).alias("cent_e")
-            )
-            # round 15: checkpoint each generation's k-row codebook —
-            # the next iteration BROADCASTS it, and a mid-plan broadcast
-            # build re-executes the whole chain above it (the
-            # graph_hits_scores finding; rule 5)
-            .localCheckpoint(eager=True)
-        )
-    return cent
-
-
 def sim_search_ann_ivf_kmeans_exact(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -302,7 +265,7 @@ def sim_search_ann_ivf_kmeans_exact(
     q = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
     )
-    cent = _train_kmeans_codebook_exact(cand, IVF_K, KMEANS_ITERS)
+    cent = _train_kmeans_codebook(cand, IVF_K, KMEANS_ITERS, exact=True)
     return _ivf_search(q, cand, cent)
 
 
@@ -2778,9 +2741,9 @@ def sim_eval_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     unlabeled corpus before trusting the IVF routing).
 
     Determinism: the trained codebook is the scaled-int64-exact
-    Lloyd's codebook (`_train_kmeans_codebook_exact`); distances come
-    from the SAME 6-dp rounded cosines both engines rank identically,
-    so a = 1−cc₁, b = 1−cc₂ off the rank-1/rank-2 window rows, and
+    Lloyd's codebook (`_train_kmeans_codebook(..., exact=True)`);
+    distances come from the SAME 6-dp rounded cosines both engines rank
+    identically, so a = 1−cc₁, b = 1−cc₂ off the rank-1/rank-2 window rows, and
     each point's s quantizes to scaled int64 before the exact
     per-cluster sum. Zero-denominator points (duplicate of the
     centroid with a tie) define s = 0, guarded identically.
@@ -2794,7 +2757,7 @@ def sim_eval_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = emb.filter(F.col("vec_id") >= N_QUERIES).select(
         F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ce")
     )
-    cent = _train_kmeans_codebook_exact(cand, IVF_K, KMEANS_ITERS)
+    cent = _train_kmeans_codebook(cand, IVF_K, KMEANS_ITERS, exact=True)
     scored = cand.join(F.broadcast(cent)).select(
         "neighbor_id",
         "cent_id",

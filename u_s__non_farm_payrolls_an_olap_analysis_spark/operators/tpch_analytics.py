@@ -561,12 +561,14 @@ def tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the base table's rows at ~12 bytes each, so a ≤256 MB compressed
     # orders file bounds the broadcast comfortably under executor memory.
     # Past the gate the degrade is an EXPLICIT shuffled-hash with the
-    # reduced orders side as build (scripts/measure_q8_variants.py:
+    # reduced orders side as build (measured by the since-deleted
+    # `git show 8188806:scripts/measure_q8_variants.py`:
     # 1.53 s vs sort-merge 2.2 s at 30x, 3.6 s vs 5.1 s at 100x — SMJ
     # pays a 60M-row sort the hash build avoids; per-partition builds
     # stay bounded because the build side is the 5x-reduced relation and
     # AQE splits skewed partitions). Recurring q8 at rest skips all of
-    # this via the bucketed layout (SCALE.md, measure_bucketed_q8.py).
+    # this via the bucketed layout (SCALE.md,
+    # `git show 8188806:scripts/measure_bucketed_q8.py`).
     if table_bytes(sf_dir, "orders") <= 256 << 20:
         asia_orders = F.broadcast(asia_orders)
     else:
